@@ -23,9 +23,24 @@ import gen
 import probe
 import workloads
 
-WARMUP_PASSES = 2
+# Warm-up: the cold pass, then WARMUP_WARM[workload] passes. Under the
+# default tiered JIT a pass's wall time settles after a few warm passes,
+# while C2 keeps compiling for tens of passes; the registry queries'
+# planner and scheduler code needs more passes than the UDF operators
+# (NOTES.md). The count is fixed, not a time, so a run on a slow host does
+# not start timing with a less compiled JVM; the record's
+# ``warmup_settled`` says whether CPU per pass had stopped falling (the
+# last warm pass within SETTLED of the one before).
+WARMUP_WARM = {"udf_ops": 3, "windows": 8, "text_pipelines": 3}
+SETTLED = 0.95
 DRIVER_HEAP = "3g"
 PASSES_DONE = "perfbench: timed passes done"
+
+
+def settled(cpu: list[float]) -> bool:
+    """Whether per-pass CPU seconds (warm passes, oldest first) have
+    stopped falling."""
+    return len(cpu) >= 2 and cpu[-1] >= SETTLED * cpu[-2]
 
 
 def _now() -> float:
@@ -64,8 +79,8 @@ class Run:
         self.args = args
         self.work = args.work
         self.excluded = 0.0  # input generation, copies, GC, checks
-        self.failures: dict[str, str] = {}
-        self.attempted = 0
+        self.failures: dict[str, str] = {}  # op name -> first diff or traceback
+        self.attempted = 0  # executions
         self.failed = 0
         self.loads = LoadTimer()
         self.stores = None
@@ -105,16 +120,10 @@ class Run:
 
     def build_ops(self) -> None:
         t = _now()
-        wl = self.args.workload
-        if wl == "udf_ops":
+        if self.args.workload == "udf_ops":
             self.ops = workloads.udf_ops(self.frame, self.loads.wrap)
         else:
-            self.ops = workloads.windows_ops(self.master)
-            if self.args.trace:
-                from pandarallel_spark.workload import core_ops, extensions, relational_ops
-
-                for mod in (core_ops, extensions, relational_ops):
-                    mod.load_table = self.loads.wrap(mod.load_table)
+            self.ops = workloads.registry_ops(self.args.workload, self.master, self.loads.wrap)
         self.excluded += _now() - t  # pandas references are computed here
 
     # -- passes --------------------------------------------------------------
@@ -137,6 +146,7 @@ class Run:
         spans: list[dict] = []
         self.loads.on, self.loads.s = traced, 0.0
         cpu0, dcpu0, host0 = probe.tree_cpu_s(self.pid), _driver_cpu(), probe.host_cpu()
+        jit0 = probe.jit_cpu(self.pid)
         t0 = _now()
         for op in self.ops:
             self.attempted += 1
@@ -177,13 +187,17 @@ class Run:
             spans.append(span)
         wall = _now() - t0
         cpu = probe.tree_cpu_s(self.pid) - cpu0
+        jit = probe.jit_cpu_s(jit0, probe.jit_cpu(self.pid))
         dcpu = _driver_cpu() - dcpu0
         busy, steal = probe.host_shares(host0, probe.host_cpu())
         self.loads.on = False
         self.check(outputs)
         shutil.rmtree(d, ignore_errors=True)
-        rec = {"pass": i, "traced": traced, "wall_s": wall, "cpu_s": cpu,
-               "driver_cpu_s": dcpu, "busy_frac": busy, "steal_frac": steal, "spans": spans}
+        # cpu_s leaves out the JIT compiler threads: compiling is warm-up
+        # work, and its bursts are what made CPU per pass spread (NOTES.md)
+        rec = {"pass": i, "traced": traced, "wall_s": wall, "cpu_s": cpu - jit,
+               "jit_cpu_s": jit, "driver_cpu_s": dcpu, "busy_frac": busy,
+               "steal_frac": steal, "spans": spans}
         if traced:
             self.read_stores(rec)
         return rec
@@ -196,6 +210,9 @@ class Run:
             except AssertionError as e:
                 self.failed += 1
                 self.failures.setdefault(op.name, str(e)[-2000:])
+            except Exception:  # noqa: BLE001 - e.g. a missing output column
+                self.failed += 1
+                self.failures.setdefault(op.name, traceback.format_exc(limit=3)[-2000:])
         self.excluded += _now() - t
 
     def read_stores(self, rec: dict) -> None:
@@ -217,13 +234,13 @@ class Run:
         if a.trace:
             self.stores = probe.SparkStores(self.spark)
         self.build_ops()
-        warm = []
-        for i in range(WARMUP_PASSES):
-            warm.append(self.run_pass(i, collect=(i == 0), traced=False))
+        warm = [self.run_pass(0, collect=True, traced=False)]
+        for i in range(1, 1 + WARMUP_WARM[a.workload]):
+            warm.append(self.run_pass(i, collect=False, traced=False))
         t_first = _now()
         setup_s = t_first - a.t_spawn - self.excluded
         timed = []
-        i = WARMUP_PASSES
+        i = len(warm)
         # trace runs mix traced and untraced passes in the order T U U T,
         # so both sides of trace.overhead_s come from one process and a
         # steady speed-up across passes favours neither side
@@ -238,6 +255,7 @@ class Run:
             "input_id": self.input_id, "sizes": gen.SIZES if a.workload != "udf_ops"
             else {"udf_rows": gen.UDF_ROWS, "many_groups": gen.MANY_GROUPS},
             "ops": [op.name for op in self.ops],
+            "warmup_settled": settled([p["cpu_s"] for p in warm[1:]]),
             "setup_s": setup_s, "session_start_s": self.session_start_s,
             "first_pass_s": warm[0]["wall_s"],
             "attempted": self.attempted, "failed": self.failed, "failures": self.failures,

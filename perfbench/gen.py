@@ -3,9 +3,10 @@
 Every input the benchmark feeds the library is made here from the run's
 ``--seed``: the same seed gives byte-identical parquet files. The tables
 follow the testdata schemas; ``lineitem`` and ``events``, which the
-``windows`` queries read, also follow its value distributions, at the
-row counts in ``SIZES``. The ``udf_ops`` frame follows the reference
-notebook's inputs.
+``windows`` queries read, and ``documents``, which ``text_pipelines``
+reads, also follow its value distributions, at the row counts in
+``SIZES``. The ``udf_ops`` frame follows the reference notebook's
+inputs.
 
 Prices and event values are whole cents divided by 100, as in the
 testdata, so the registry's exact-cents oracles hold.
@@ -26,7 +27,7 @@ import pyarrow.parquet as pq
 SIZES = {
     "lineitem": 60_000,
     "events": 20_000,
-    "documents": 100,
+    "documents": 5_000,
     "embeddings": 100,
     "orders": 200,
     "customer": 50,
@@ -86,6 +87,26 @@ def tables(seed: int) -> dict[str, pd.DataFrame]:
         "value": np.minimum(rng.exponential(5000, n).astype("int64"), 56_021) / 100.0,
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
     })
+    n = SIZES["documents"]
+    # 8-80 words from a small vocabulary, with a few exact copies and a
+    # few one-word edits, so the dedup queries find pairs. Edits go only
+    # into copies of 20 words or more: they keep word-3-gram Jaccard at
+    # 0.7 or above, where dedup_minhash_lsh's oracle is exact (its
+    # registry entry), as on the testdata
+    words = np.array(_WORDS)
+    texts = [list(rng.choice(words, k)) for k in rng.integers(8, 81, n)]
+    for src, dst in rng.integers(0, n, (n // 100, 2)):
+        texts[dst] = list(texts[src])
+        if dst % 2 and len(texts[dst]) >= 20:
+            texts[dst][int(rng.integers(len(texts[dst])))] = str(rng.choice(words))
+    texts = [" ".join(t) for t in texts]
+    out["documents"] = pd.DataFrame({
+        "doc_id": np.arange(n, dtype="int64"),
+        "text": texts,
+        "lang": rng.choice(_LANGS, n),
+        "source": [f"src{i % 20}" for i in range(n)],
+        "n_chars": np.array([len(t) for t in texts], dtype="int64"),
+    })
     out.update(_unread_tables(rng))
     return out
 
@@ -93,19 +114,11 @@ def tables(seed: int) -> dict[str, pd.DataFrame]:
 def _unread_tables(rng: np.random.Generator) -> dict[str, pd.DataFrame]:
     """The other testdata tables, small: the workloads read none of them,
     but the oracle connection binds every testdata table."""
-    n_cust, n_part, n_supp, n_ord, n_doc, n_vec = (
-        SIZES[k] for k in ("customer", "part", "supplier", "orders", "documents", "embeddings")
+    n_cust, n_part, n_supp, n_ord, n_vec = (
+        SIZES[k] for k in ("customer", "part", "supplier", "orders", "embeddings")
     )
-    texts = [" ".join(rng.choice(np.array(_WORDS), 20)) for _ in range(n_doc)]
     vecs = rng.standard_normal((n_vec, 64)).astype("float32")
     return {
-        "documents": pd.DataFrame({
-            "doc_id": np.arange(n_doc, dtype="int64"),
-            "text": texts,
-            "lang": rng.choice(_LANGS, n_doc),
-            "source": [f"src{i % 20}" for i in range(n_doc)],
-            "n_chars": np.array([len(t) for t in texts], dtype="int64"),
-        }),
         "embeddings": pd.DataFrame({
             "vec_id": np.arange(n_vec, dtype="int64"),
             "embedding": list(vecs / np.linalg.norm(vecs, axis=1, keepdims=True)),

@@ -51,6 +51,40 @@ def tree_cpu_s(root: int) -> float:
     return total / _TICK
 
 
+# thread names (15-character ``comm``) of HotSpot's JIT compiler threads
+_JIT_THREADS = ("C1 CompilerThre", "C2 CompilerThre")
+
+
+def jit_cpu(root: int) -> dict[int, int]:
+    """CPU ticks of each live JIT compiler thread in the tree, by thread
+    id. HotSpot starts and stops compiler threads as its queue grows and
+    drains, so callers compare per thread id."""
+    out = {}
+    for pid in tree(root):
+        try:
+            tids = os.listdir(f"/proc/{pid}/task")
+        except OSError:
+            continue
+        for tid in tids:
+            try:
+                with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                    if f.read().rstrip("\n") not in _JIT_THREADS:
+                        continue
+                with open(f"/proc/{pid}/task/{tid}/stat") as f:
+                    fields = f.read().rsplit(")", 1)[1].split()
+            except OSError:
+                continue
+            out[int(tid)] = int(fields[11]) + int(fields[12])
+    return out
+
+
+def jit_cpu_s(before: dict[int, int], after: dict[int, int]) -> float:
+    """CPU seconds the JIT compiler threads used between two reads. A
+    thread that stopped in between counts with what it had used before
+    (its last ticks cannot be read)."""
+    return sum(t - before.get(tid, 0) for tid, t in after.items()) / _TICK
+
+
 def tree_rss_mb(root: int) -> float:
     total = 0
     for pid in tree(root):

@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload udf_ops --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload udf_ops --seed 1 --seconds 6 --trace 0
 
 Run from the repository root. Each run is a fresh process tree: this
 script starts ``child.py`` with the steadiness settings below, samples
@@ -29,9 +29,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import probe  # noqa: E402
+from child import PASSES_DONE  # noqa: E402
 from workloads import WORKLOADS  # noqa: E402
 
-PASSES_DONE = "perfbench: timed passes done"
 CHILD_TIMEOUT_S = 170
 PR_SET_CHILD_SUBREAPER = 36
 
@@ -66,9 +66,8 @@ def _env(work: str) -> dict:
         TMPDIR=tmp,
         SPARK_GRAFT_LOCAL_DIR=local,
         SPARK_LOCAL_DIRS=local,
-        # C1-only JIT: it settles within the cold pass (NOTES.md); and no
-        # hsperfdata file in /tmp
-        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -XX:TieredStopAtLevel=1",
+        # no hsperfdata file in /tmp
+        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         PYSPARK_PYTHON=sys.executable,
         PYTHONPATH=os.pathsep.join([os.getcwd(), HERE]),
         PYTHONDONTWRITEBYTECODE="1",
@@ -168,15 +167,20 @@ def _layers(rec: dict) -> dict:
 def _summary(rec: dict, peak_rss: float) -> tuple[dict, dict]:
     """(end-to-end metrics, extra record fields)."""
     plain = [p for p in rec["timed"] if not p["traced"]]
+    # an operation fails if any of its executions raised or any of its
+    # checked outputs differed, so one bad operation moves the share by
+    # 1/len(ops) however many passes ran
+    fail_frac = len(rec["failures"]) / len(rec["ops"])
     e2e = {
         "setup_s": rec["setup_s"],
         "pass_s": _median([p["wall_s"] for p in plain]),
         "pass_cpu_s": _median([p["cpu_s"] for p in plain]),
         "peak_rss_mb": peak_rss,
-        "ok_frac": 1.0 - rec["failed"] / rec["attempted"],
+        "ok_frac": 1.0 - fail_frac,
     }
     extra = {
-        "fail_frac": rec["failed"] / rec["attempted"],
+        "fail_frac": fail_frac,
+        "warmup_passes": len(rec["warmup"]),
         "timed_passes": len(rec["timed"]),
         "pass_s_all": [p["wall_s"] for p in rec["timed"]],
         "host.steal_frac": _median([p["steal_frac"] for p in rec["timed"]]),
@@ -263,7 +267,8 @@ def main() -> int:
     e2e, extra = _summary(rec, sampler.peak)
     record = {**{k: rec[k] for k in ("workload", "seed", "seconds", "trace", "cpus",
                                      "driver_heap", "input_id", "sizes", "ops",
-                                     "attempted", "failed", "failures")},
+                                     "warmup_settled", "attempted", "failed",
+                                     "failures")},
               "end_to_end": e2e, **extra, "passes": rec["warmup"] + rec["timed"]}
     with open(os.path.join(records, name + ".json"), "w") as f:
         json.dump(record, f, indent=1)

@@ -7,12 +7,14 @@ The last test runs the benchmark end to end once (about a minute).
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
 import subprocess
 import sys
 
+import pandas as pd
 import pytest
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -20,9 +22,11 @@ BENCH = os.path.dirname(HERE)
 ROOT = os.path.dirname(BENCH)
 sys.path.insert(0, BENCH)
 
+import child  # noqa: E402
 import gen  # noqa: E402
 import probe  # noqa: E402
 import run  # noqa: E402
+import workloads  # noqa: E402
 
 
 def test_inputs_depend_only_on_the_seed(tmp_path):
@@ -42,6 +46,45 @@ def test_generated_prices_are_whole_cents():
     assert t["events"]["ts"].is_monotonic_increasing and t["events"]["ts"].is_unique
 
 
+def test_planted_near_duplicates_keep_jaccard_at_least_0_7():
+    """Every document pair at word-3-gram Jaccard >= 0.5 (the dedup
+    queries' threshold) is at 0.7 or above, where MinHash-LSH recall is
+    exact (dedup_minhash_lsh's registry entry)."""
+    from collections import Counter
+    from itertools import combinations
+
+    docs = gen.tables(4)["documents"]["text"].str.split()
+    sh = [{" ".join(t[i:i + 3]) for i in range(len(t) - 2)} for t in docs]
+    index: dict[str, list[int]] = {}
+    for d, s in enumerate(sh):
+        for g in s:
+            index.setdefault(g, []).append(d)
+    inter = Counter(p for ds in index.values() for p in combinations(ds, 2))
+    j = [i / (len(sh[a]) + len(sh[b]) - i) for (a, b), i in inter.items()]
+    near = [x for x in j if x >= 0.5]
+    assert near and min(near) >= 0.7
+
+
+def test_warmup_settles_once_cpu_per_pass_stops_falling():
+    assert not child.settled([9.0, 7.6, 6.4])
+    assert child.settled([9.0, 6.4, 6.2])
+    assert not child.settled([5.0])
+
+
+def test_a_failing_check_of_any_kind_names_the_operation(tmp_path):
+    r = child.Run(argparse.Namespace(work=str(tmp_path)))
+
+    def missing_column(pdf):
+        pdf["nope"]
+
+    ops = [workloads.Op("keyerror", "engine", None, missing_column),
+           workloads.Op("diff", "engine", None, lambda pdf: workloads._close([1.0], [2.0], "x")),
+           workloads.Op("fine", "engine", None, lambda pdf: None)]
+    r.check([(op, pd.DataFrame({"a": [1]})) for op in ops])
+    assert r.failed == 2 and set(r.failures) == {"keyerror", "diff"}
+    assert "KeyError" in r.failures["keyerror"]
+
+
 @pytest.mark.parametrize("text,value", [
     ("1.7 s", 1.7), ("555 ms", 0.555), ("2.0 MiB", 2.0), ("1024.0 KiB", 1.0),
     ("100,000", 100000.0), ("0.0 B", 0.0),
@@ -54,6 +97,8 @@ def test_sql_metric_parsing(text, value):
 def test_proc_readers_see_this_process():
     assert os.getpid() in probe.tree(os.getppid())
     assert probe.tree_cpu_s(os.getpid()) > 0
+    assert probe.jit_cpu(os.getpid()) == {}  # no JVM in this tree
+    assert probe.jit_cpu_s({1: 5, 2: 7}, {2: 9, 3: 4}) == pytest.approx(6 / probe._TICK)
     assert probe.tree_rss_mb(os.getpid()) > 1
     before = probe.host_cpu()
     sum(i * i for i in range(200_000))
@@ -81,8 +126,11 @@ def _pass(wall, traced):
 
 
 def test_summary_medians_and_layer_accounting():
-    rec = {"setup_s": 20.0, "attempted": 8, "failed": 2, "trace": 1, "ops": ["q"],
-           "session_start_s": 5.0, "first_pass_s": 9.0,
+    # one of four operations failed in 2 of its 20 executions: the share
+    # counts the operation once
+    rec = {"setup_s": 20.0, "attempted": 80, "failed": 2, "trace": 1,
+           "ops": ["q", "r", "s", "t"], "failures": {"r": "rowcount 1 != 2"},
+           "session_start_s": 5.0, "first_pass_s": 9.0, "warmup": [_pass(3.0, False)],
            "timed": [_pass(1.05, True), _pass(1.0, False), _pass(1.2, False), _pass(1.05, True)]}
     e2e, extra = run._summary(rec, peak_rss=100.0)
     assert e2e["pass_s"] == pytest.approx(1.1)  # untraced passes only

@@ -11,8 +11,11 @@ An operation is either
 
 ``check(result)`` raises ``AssertionError`` naming the difference when
 the output disagrees with its reference. References are independent of
-the library: the registry's DuckDB oracles for ``windows``, stock pandas
-on the same generated frame for ``udf_ops``.
+the library: the registry's DuckDB oracles for the registry workloads,
+stock pandas on the same generated frame for ``udf_ops``.
+
+Each workload's builder takes ``wrap_load``, which wraps the input reads
+so a traced pass can time them apart (``sources.load_s``).
 """
 
 from __future__ import annotations
@@ -85,11 +88,10 @@ def _series_equal(ref: pd.Series):
     return check
 
 
-def udf_ops(frame: pd.DataFrame, wrap_load: Callable = lambda fn: fn) -> list[Op]:
+def udf_ops(frame: pd.DataFrame, wrap_load: Callable) -> list[Op]:
     """Row apply (stock and ``_vectorize`` fast path) and groupby apply
     over few and many groups on the engine facade, and the compat shim's
-    row apply. ``wrap_load`` wraps the input read so a traced pass can
-    time it."""
+    row apply."""
     from pandarallel_spark import parallelize
 
     parquet = wrap_load(lambda spark, path: spark.read.parquet(path))
@@ -125,14 +127,22 @@ def udf_ops(frame: pd.DataFrame, wrap_load: Callable = lambda fn: fn) -> list[Op
 
 # -- registry workloads ------------------------------------------------------
 
-# Window-family registry queries; the rest of the family is left out to
-# fit the run length (NOTES.md).
-WINDOW_QUERIES = (
-    "grouped_expanding_max",
-    "time_rolling_purchase_cents_1h",
-    "rolling_corr_qty_price",
-    "groupby_agg_pricing_summary",
-)
+# Registry queries per workload; the rest of each family is left out to
+# fit the run length (NOTES.md). ``text_pipelines`` is not in
+# BENCHMARK.json (NOTES.md says why) but runs the same way by hand.
+REGISTRY = {
+    "windows": (
+        "grouped_expanding_max",
+        "time_rolling_purchase_cents_1h",
+        "rolling_corr_qty_price",
+        "groupby_agg_pricing_summary",
+    ),
+    "text_pipelines": (
+        "dedup_minhash_lsh",
+        "dedup_substring_spans",
+        "bm25_topk",
+    ),
+}
 
 
 class _Collected:
@@ -146,20 +156,24 @@ class _Collected:
         return self._pdf
 
 
-def windows_ops(oracle_dir: str) -> list[Op]:
+def registry_ops(workload: str, oracle_dir: str, wrap_load: Callable) -> list[Op]:
     """Registry queries checked against their DuckDB oracles with the
-    test suite's own comparison (``tests/oracle_utils.compare``)."""
+    test suite's own comparison (``tests/oracle_utils.compare``). The
+    queries read their inputs through the registry modules' own
+    ``load_table`` binding, so that binding is what ``wrap_load`` wraps."""
     sys.path.insert(0, os.path.join(os.getcwd(), "tests"))
     import oracle_utils
 
-    from pandarallel_spark.workload import oracle_sql, queries
+    from pandarallel_spark.workload import core_ops, extensions, oracle_sql, queries, relational_ops
 
+    for mod in (core_ops, extensions, relational_ops):
+        mod.load_table = wrap_load(mod.load_table)
     qs, oracles = queries(), oracle_sql()
 
     def checker(name):
         return lambda pdf: oracle_utils.compare(_Collected(pdf), oracles[name], oracle_dir)
 
-    return [Op(n, "engine", qs[n], checker(n)) for n in WINDOW_QUERIES]
+    return [Op(n, "engine", qs[n], checker(n)) for n in REGISTRY[workload]]
 
 
-WORKLOADS = ("udf_ops", "windows")
+WORKLOADS = ("udf_ops", *REGISTRY)
